@@ -1100,13 +1100,15 @@ object Dedup {
         // aware, so neither re-shuffles the label table
         .repartition(col("id"))
         .localCheckpoint(true)
-      converged = next.filter(col("label") =!= col("prev")).isEmpty
+      val changedRows = next.filter(col("label") =!= col("prev"))
       labels = next.select(col("id"), col("label"))
       iter += 1
       if (ccDebug) {
-        val changed = next.filter(col("label") =!= col("prev")).count()
+        // one job for both: the count decides convergence too
+        val changed = changedRows.count()
+        converged = changed == 0
         println(f"[cc] round $iter ${(System.nanoTime() - tRound) / 1e9}%.3f s converged=$converged changed=$changed")
-      }
+      } else converged = changedRows.isEmpty
     }
     labels
   }

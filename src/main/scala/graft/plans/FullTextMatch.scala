@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeProjection}
@@ -81,24 +81,16 @@ object PushLimitIntoFullTextMatch extends Rule[LogicalPlan] {
   }
 }
 
-/** Public entry points. */
+/** Registers the operator's planner hooks on a session. */
 object GraftSearch {
 
   /** Idempotent registration on an existing session (public hooks). */
-  def register(spark: SparkSession): Unit = {
+  def register(spark: SparkSession): Unit = synchronized {
     if (!spark.experimental.extraStrategies.contains(FullTextMatchStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ FullTextMatchStrategy
     if (!spark.experimental.extraOptimizations.contains(PushLimitIntoFullTextMatch))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ PushLimitIntoFullTextMatch
-  }
-
-  /** Top-k search as a DataFrame whose plan IS the custom operator. */
-  def search(spark: SparkSession, indexDir: String, query: String,
-      k: Int = 1000, fuzzy: Boolean = false): DataFrame = {
-    register(spark)
-    org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
-      FullTextMatch(indexDir, query, k, fuzzy))
   }
 }

@@ -304,13 +304,6 @@ final class IndexReader private (
       }
     all.sortBy(h => (-h.score, h.docId)).take(k).toArray
   }
-
-  def search(queryText: String, k: Int, fuzzy: Boolean = false): DataFrame = {
-    import spark.implicits._
-    searchHits(resolve(queryText, fuzzy), k).zipWithIndex
-      .map { case (h, i) => (i + 1, h.docId, h.score) }.toSeq
-      .toDF("rank", "doc_id", "score")
-  }
 }
 
 object IndexReader {

@@ -30,10 +30,16 @@ object Searcher {
       fuzzy: Boolean = false): ResolvedQuery =
     IndexReader.open(spark, indexDir).resolve(queryText, fuzzy)
 
-  /** Top-k via block-max WAND. Returns (rank, doc_id, score). */
+  /** Top-k via block-max WAND as a DataFrame of (rank, doc_id, score)
+    * whose plan is the Catalyst [[graft.plans.FullTextMatch]] node, so the
+    * optimizer sees the search (a LIMIT above it folds into k).
+    */
   def search(spark: SparkSession, indexDir: String, queryText: String,
-      k: Int, fuzzy: Boolean = false): DataFrame =
-    IndexReader.open(spark, indexDir).search(queryText, k, fuzzy)
+      k: Int, fuzzy: Boolean = false): DataFrame = {
+    graft.plans.GraftSearch.register(spark)
+    org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
+      graft.plans.FullTextMatch(indexDir, queryText, k, fuzzy))
+  }
 
   def searchHits(spark: SparkSession, indexDir: String,
       rq: ResolvedQuery, k: Int): Array[Hit] =

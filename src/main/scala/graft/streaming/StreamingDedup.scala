@@ -40,12 +40,29 @@ object StreamingDedup {
     else hashed.dropDuplicates("content_hash")
   }
 
-  /** Streaming NEAR-dup sweep: every micro-batch runs
-    * [[graft.ops.Dedup.minHashLshIncremental]] against the band store of
-    * everything previously landed, then appends itself to the store — the
-    * incremental batch-sweep family driven continuously by Structured
-    * Streaming. By the telescoping contract (spec-pinned at the ops
-    * layer), the union of all per-batch pair outputs equals one full
+  /** Drive a micro-batch function over a stream: the one
+    * `writeStream.foreachBatch` wrapper every sweep and gate below runs
+    * under, e.g.
+    * `sweep(docs, ckpt)(sweepBatch(_, _, "text", "doc_id", state, 3, 64,
+    * 16, 0.8, 42L, 64))`. `batchFn` receives each micro-batch and its
+    * batchId; the `*Batch` functions are idempotent per batchId, so a
+    * batch replayed from `checkpointDir` after a crash overwrites its own
+    * output.
+    */
+  def sweep(docs: DataFrame, checkpointDir: String)(
+      batchFn: (DataFrame, Long) => Unit): StreamingQuery =
+    docs.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(batchFn)
+      .start()
+
+  /** Streaming NEAR-dup sweep, one micro-batch: runs
+    * [[graft.ops.Dedup.minHashLshIncremental]] for `batch` against the
+    * band store of everything previously landed under `stateDir`, writes
+    * this batch's pairs, then lands the batch's band rows and text — the
+    * incremental batch-sweep family driven continuously by [[sweep]]. By
+    * the telescoping contract (spec-pinned at the ops layer), the union of
+    * all per-batch pair outputs equals one full
     * [[graft.ops.Dedup.minHashLsh]] run over the whole landed corpus, with
     * every pair emitted exactly once, by the batch that completed it.
     *
@@ -58,23 +75,6 @@ object StreamingDedup {
     * double-lands rows nor pairs the batch against its own half-landed
     * remains. At 100 TB each sweep costs O(batch) hashing plus a banded
     * join against the store — never a full-corpus re-pair.
-    */
-  def nearDupSweep(docs: DataFrame, textCol: String, idCol: String,
-      stateDir: String, checkpointDir: String, shingleSize: Int = 3,
-      numHashes: Int = 64, bands: Int = 16, minJaccard: Double = 0.8,
-      seed: Long = 42L, maxBucketSize: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sweepBatch(batch, batchId, textCol, idCol, stateDir, shingleSize,
-          numHashes, bands, minJaccard, seed, maxBucketSize)
-      }
-      .start()
-
-  /** One micro-batch of [[nearDupSweep]] (exposed for direct testing and
-    * for callers driving their own batch loop): sweep `batch` against the
-    * landed state under `stateDir`, write this batch's pairs, then land
-    * the batch's band rows and text. Idempotent per batchId.
     */
   def sweepBatch(batch: DataFrame, batchId: Long, textCol: String,
       idCol: String, stateDir: String, shingleSize: Int, numHashes: Int,
@@ -94,23 +94,11 @@ object StreamingDedup {
     writeBatch(b, s"$stateDir/corpus", batchId)
   }
 
-  /** SimHash sibling of [[nearDupSweep]]: the persisted state is just the
-    * (id, simhash) table — one long per doc, the cheapest of the three
-    * stores — plus the pairs output. Same telescoping and crash-replay
-    * contracts.
+  /** SimHash sibling of [[sweepBatch]], one micro-batch: the persisted
+    * state is just the (id, simhash) table — one long per doc, the
+    * cheapest of the stores — plus the pairs output. Same telescoping and
+    * crash-replay contracts; idempotent per batchId.
     */
-  def simHashSweep(docs: DataFrame, textCol: String, idCol: String,
-      stateDir: String, checkpointDir: String, maxHamming: Int = 3,
-      maxBucketSize: Int = 64): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        simHashSweepBatch(batch, batchId, textCol, idCol, stateDir,
-          maxHamming, maxBucketSize)
-      }
-      .start()
-
-  /** One micro-batch of [[simHashSweep]]. Idempotent per batchId. */
   def simHashSweepBatch(batch: DataFrame, batchId: Long, textCol: String,
       idCol: String, stateDir: String, maxHamming: Int,
       maxBucketSize: Int): Unit = {
@@ -124,26 +112,14 @@ object StreamingDedup {
     writeBatch(sims(b), s"$stateDir/simhash", batchId)
   }
 
-  /** Embedding sibling of [[nearDupSweep]]: the persisted state is the
-    * (id, srp_bucket, vec) table [[graft.ops.Similarity.withSrpBucket]]
-    * produces — the SAME table `lshKnn` serves ANN from, maintained here
-    * incrementally as batches stream in. Same telescoping (vs
+  /** Embedding sibling of [[sweepBatch]], one micro-batch: the persisted
+    * state is the (id, srp_bucket, vec) table
+    * [[graft.ops.Similarity.withSrpBucket]] produces — the SAME table
+    * `lshKnn` serves ANN from, maintained here incrementally as batches
+    * stream in. Same telescoping (vs
     * `embeddingNearDupPairs(probeHamming = 1)`) and crash-replay
-    * contracts.
+    * contracts; idempotent per batchId.
     */
-  def embeddingSweep(docs: DataFrame, vecCol: String, idCol: String,
-      stateDir: String, checkpointDir: String, dim: Int, nBits: Int = 6,
-      seed: Long = 42L, minCosine: Double = 0.3,
-      maxBucketSize: Int = 256): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        embeddingSweepBatch(batch, batchId, vecCol, idCol, stateDir, dim,
-          nBits, seed, minCosine, maxBucketSize)
-      }
-      .start()
-
-  /** One micro-batch of [[embeddingSweep]]. Idempotent per batchId. */
   def embeddingSweepBatch(batch: DataFrame, batchId: Long, vecCol: String,
       idCol: String, stateDir: String, dim: Int, nBits: Int, seed: Long,
       minCosine: Double, maxBucketSize: Int): Unit = {
@@ -160,30 +136,17 @@ object StreamingDedup {
     writeBatch(bucketed(b), s"$stateDir/buckets", batchId)
   }
 
-  /** SemDeDup sibling of [[nearDupSweep]] (7th family member): the
-    * persisted state is the (id, cluster, vec) table
+  /** SemDeDup sibling of [[sweepBatch]], one micro-batch: the persisted
+    * state is the (id, cluster, vec) table
     * [[graft.ops.Similarity.withIvfCluster]] produces — the same table
     * IVF ANN serves probes from — maintained incrementally as batches
     * stream in. The coarse quantizer is FROZEN (`model` is trained
     * offline, the SemDeDup deployment shape — same trust model as
-    * [[unigramQualityGate]]'s frozen lexicon), so stored assignments
+    * [[unigramQualityGateBatch]]'s frozen lexicon), so stored assignments
     * never go stale. Telescoping vs
     * `Dedup.semanticNearDupPairs(all batches)` and crash-replay
     * idempotency are spec-pinned like the other sweeps.
     */
-  def semanticSweep(docs: DataFrame, vecCol: String, idCol: String,
-      stateDir: String, checkpointDir: String,
-      model: graft.ops.Similarity.IvfModel, minCosine: Double = 0.9,
-      maxClusterSize: Int = 1024): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semanticSweepBatch(batch, batchId, vecCol, idCol, stateDir, model,
-          minCosine, maxClusterSize)
-      }
-      .start()
-
-  /** One micro-batch of [[semanticSweep]]. Idempotent per batchId. */
   def semanticSweepBatch(batch: DataFrame, batchId: Long, vecCol: String,
       idCol: String, stateDir: String,
       model: graft.ops.Similarity.IvfModel, minCosine: Double,
@@ -201,8 +164,8 @@ object StreamingDedup {
     writeBatch(clustered(b), s"$stateDir/clusters", batchId)
   }
 
-  /** Substring-level sibling of [[nearDupSweep]]: the persisted state is
-    * the per-(gram, doc) window-count table
+  /** Substring-level sibling of [[sweepBatch]], one micro-batch: the
+    * persisted state is the per-(gram, doc) window-count table
     * [[graft.ops.Dedup.duplicateSubstringGramStore]] produces. Each batch
     * sweeps itself against the landed store via
     * [[graft.ops.Dedup.duplicateSubstringsIncremental]] and emits every
@@ -214,21 +177,8 @@ object StreamingDedup {
     * the LATEST emission per gram across all batches equals the full-run
     * [[graft.ops.Dedup.duplicateSubstrings]] table over the landed corpus
     * (spec-pinned). Readers take max-`_batch` per gram; no retractions
-    * occur because counts are monotone. Same crash-replay contract.
-    */
-  def duplicateSubstringSweep(docs: DataFrame, textCol: String,
-      idCol: String, stateDir: String, checkpointDir: String,
-      windowTokens: Int = 8, minDocs: Int = 2): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        duplicateSubstringSweepBatch(batch, batchId, textCol, idCol,
-          stateDir, windowTokens, minDocs)
-      }
-      .start()
-
-  /** One micro-batch of [[duplicateSubstringSweep]]. Idempotent per
-    * batchId.
+    * occur because counts are monotone. Same crash-replay contract;
+    * idempotent per batchId.
     */
   def duplicateSubstringSweepBatch(batch: DataFrame, batchId: Long,
       textCol: String, idCol: String, stateDir: String, windowTokens: Int,
@@ -243,8 +193,8 @@ object StreamingDedup {
     writeBatch(grams(b), s"$stateDir/grams", batchId)
   }
 
-  /** Streaming eval-set decontamination GATE: each micro-batch is checked
-    * against the STATIC benchmark table via
+  /** Streaming eval-set decontamination GATE, one micro-batch: `batch` is
+    * checked against the STATIC benchmark table via
     * [[graft.ops.Dedup.contaminationCounts]] (broadcast benchmark window
     * hashes + exact gram re-verify); contaminated docs' counts land under
     * `outDir/contam`, clean rows under `outDir/clean`. Unlike the pair
@@ -252,20 +202,8 @@ object StreamingDedup {
     * and contamination is a per-document fact, so the union of per-batch
     * outputs IS the full-run [[graft.ops.Dedup.decontaminate]] over the
     * landed corpus, exactly (spec-pinned). Same `_batch`-partitioned
-    * crash-replay contract as the sweeps.
+    * crash-replay contract as the sweeps; idempotent per batchId.
     */
-  def decontaminationGate(docs: DataFrame, benchmark: DataFrame,
-      textCol: String, idCol: String, outDir: String, checkpointDir: String,
-      windowTokens: Int = 8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        decontaminationGateBatch(batch, batchId, benchmark, textCol, idCol,
-          outDir, windowTokens)
-      }
-      .start()
-
-  /** One micro-batch of [[decontaminationGate]]. Idempotent per batchId. */
   def decontaminationGateBatch(batch: DataFrame, batchId: Long,
       benchmark: DataFrame, textCol: String, idCol: String, outDir: String,
       windowTokens: Int): Unit = {
@@ -277,28 +215,16 @@ object StreamingDedup {
       "left_anti"), s"$outDir/clean", batchId)
   }
 
-  /** Unigram-LM quality gate on a stream — the 6th gate family member,
-    * stateless like [[decontaminationGate]]: each micro-batch is scored
-    * against a FROZEN lexicon ([[graft.ops.TextAnalysis.unigramLm]],
-    * trained offline on a reference corpus — the CCNet deployment shape:
-    * the LM is a fixed artifact, documents flow past it) and split into
-    * `pass`/`fail` partitions on the mean-surprisal cap. A document's
-    * score depends only on its own tokens and the frozen lexicon, so the
-    * per-batch union equals the full batch-mode run exactly and a
-    * crash-replayed batch overwrites its own partition idempotently.
+  /** Unigram-LM quality gate on a stream, one micro-batch — stateless
+    * like [[decontaminationGateBatch]]: `batch` is scored against a FROZEN
+    * lexicon ([[graft.ops.TextAnalysis.unigramLm]], trained offline on a
+    * reference corpus — the CCNet deployment shape: the LM is a fixed
+    * artifact, documents flow past it) and split into `pass`/`fail`
+    * partitions on the mean-surprisal cap. A document's score depends only
+    * on its own tokens and the frozen lexicon, so the per-batch union
+    * equals the full batch-mode run exactly and a crash-replayed batch
+    * overwrites its own partition idempotently.
     */
-  def unigramQualityGate(docs: DataFrame, lexicon: DataFrame,
-      textCol: String, idCol: String, outDir: String, checkpointDir: String,
-      maxMeanNllMicro: Long, oovNllMicro: Long): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        unigramQualityGateBatch(batch, batchId, lexicon, textCol, idCol,
-          outDir, maxMeanNllMicro, oovNllMicro)
-      }
-      .start()
-
-  /** One micro-batch of [[unigramQualityGate]]. Idempotent per batchId. */
   def unigramQualityGateBatch(batch: DataFrame, batchId: Long,
       lexicon: DataFrame, textCol: String, idCol: String, outDir: String,
       maxMeanNllMicro: Long, oovNllMicro: Long): Unit = {

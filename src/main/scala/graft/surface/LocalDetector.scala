@@ -23,8 +23,9 @@ import scala.collection.mutable
   * (round-1 verdict item 1).
   *
   * Parity: scoring reuses the identical kernels (Analyzer, FuzzyExpand,
-  * BM25, lexicographic-term summation order) as TextSurface.searchVariants,
-  * so detections are bit-identical to the bulk surface path (SurfaceSpec).
+  * BM25, lexicographic-term summation order) as
+  * TextSurface.searchVariantsBulk, so detections are bit-identical to the
+  * bulk surface path (SurfaceSpec).
   */
 object LocalDetector {
 
@@ -77,10 +78,10 @@ object LocalDetector {
     LocalIndex(meta.numDocs, meta.avgDocLen, meta.k1, meta.b, dict, segs, docs)
   }
 
-  /** In-memory twin of TextSurface.searchVariants: same resolution, same
-    * BM25 kernel, same lexicographic-term float summation, same
-    * (entity, language) filter context, same R1 full-coverage filter and
-    * (-score, docId) ordering.
+  /** In-memory twin of TextSurface.searchVariantsBulk for one message:
+    * same resolution, same BM25 kernel, same lexicographic-term float
+    * summation, same (entity, language) filter context, same R1
+    * full-coverage filter and (-score, docId) ordering.
     */
   private[surface] def scoreMessage(idx: LocalIndex,
       termCache: mutable.Map[String, Array[Posting]], message: String,

@@ -1,6 +1,6 @@
 package graft.surface
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.analyzer.Analyzer
@@ -32,75 +32,15 @@ object TextSurface {
   final case class Detection(entity: String, value: String,
       original_text: String, detection: String, language: String)
 
-  /** Scored variant hits for a message: the engine half (steps 4-8 of the
-    * reference lifecycle). One relational plan: decode postings of the query
-    * terms → per-doc score + matched-term set → join the (filtered) forward
-    * index with parquet pushdown on entity/language → R1 full-coverage →
-    * top `size` by score.
+  /** Full detection for one message (steps 4-9: the engine pass, then
+    * R2 + R3) — a one-message [[detectBulk]].
     */
-  def searchVariants(spark: SparkSession, storeDir: String, message: String,
-      entities: Seq[String], languages: Seq[String] = Seq("en"),
-      fuzzy: Boolean = true, size: Int = 1000): Seq[VariantHit] = {
-    import spark.implicits._
-    val reader = IndexReader.open(spark, storeDir)
-    val meta = reader.meta
-    val rq = reader.resolve(message, fuzzy)
-    if (rq.terms.isEmpty) return Seq.empty
-    val bm25 = BM25(meta.k1, meta.b)
-    val idf = rq.terms.map(t => t.term -> bm25.idf(t.df, meta.numDocs)).toMap
-    val termNames = rq.terms.map(_.term)
-    val idfB = spark.sparkContext.broadcast(idf)
-
-    // per-doc (score, matched terms) from the compressed postings
-    val scored = graft.index.IndexSchemas
-      .readSegments(spark, meta.segmentsDirs(storeDir))
-      .filter(col("term").isin(termNames: _*))
-      .select("term", "postings").as[(String, Array[Byte])]
-      .flatMap { case (term, postings) =>
-        PostingCodec.decode(postings).iterator
-          .map(p => (p.docId, term,
-            idfB.value(term) * bm25.tfWeight(p.tf, bm25.normOf(p.doclen, meta.avgDocLen))))
-      }
-      .toDF("docId", "term", "contrib")
-      .groupBy("docId")
-      .agg(sum("contrib").as("rawScore"), // display only; order uses sorted sum
-        sort_array(collect_list(struct(col("term"), col("contrib")))).as("cs"),
-        collect_set("term").as("matched"))
-      .withColumn("score",
-        aggregate(col("cs"), lit(0.0), (acc, x) => acc + x.getField("contrib")))
-      .select("docId", "score", "matched")
-
-    // filter context: entity/language predicates (non-scoring) + R1
-    val docs = spark.read.schema(graft.index.IndexSchemas.docs)
-      .parquet(meta.docsDirs(storeDir): _*)
-      .filter(col("repo").isin(entities: _*) &&
-        (if (languages.nonEmpty) col("lang").isin(languages: _*) else lit(true)))
-      .select(col("docId"), col("repo").as("entity"), col("path").as("value"),
-        col("commit").as("variant"), map_keys(col("tfs")).as("variantTerms"))
-
-    docs.join(scored, "docId")
-      .filter(forall(col("variantTerms"), t => array_contains(col("matched"), t)))
-      .select("entity", "value", "variant", "score", "docId")
-      .orderBy(desc("score"), asc("docId"))
-      .limit(size)
-      .as[(String, String, String, Double, Long)]
-      .collect()
-      .map(r => VariantHit(r._1, r._2, r._3, r._4))
-      .toSeq
-  }
-
-  /** Full detection for one message (steps 8-9: R2 + R3). */
   def detect(spark: SparkSession, storeDir: String, message: String,
       entities: Seq[String], languages: Seq[String] = Seq("en"),
       fuzzy: Boolean = true, lo: Int = 4, hi: Int = 7,
-      minTokenSize: Int = 4): Map[String, Seq[Detection]] = {
-    val hits = searchVariants(spark, storeDir, message, entities, languages, fuzzy)
-    val language = languages.headOption.getOrElse("en")
-    // canonical query text: lowercase + tokenize + rejoin
-    // (text_detection.py:153-164)
-    val processedText = Analyzer.lower(message)
-    postProcess(hits, processedText, entities, language, lo, hi, minTokenSize)
-  }
+      minTokenSize: Int = 4): Map[String, Seq[Detection]] =
+    detectBulk(spark, storeDir, Seq(message), entities, languages, fuzzy,
+      lo, hi, minTokenSize).head
 
   /** R2 + R3, pure client-side logic (deterministic greedy — the order IS
     * the contract, text_detection.py:256-331).

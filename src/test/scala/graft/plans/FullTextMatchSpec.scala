@@ -15,7 +15,7 @@ class FullTextMatchSpec extends SparkTestBase {
   }
 
   test("custom operator plans into FullTextMatchExec") {
-    val df = GraftSearch.search(spark, indexDir, "import merge", 10)
+    val df = Searcher.search(spark, indexDir, "import merge", 10)
     val execNodes = df.queryExecution.executedPlan.collect {
       case e: FullTextMatchExec => e
     }
@@ -24,15 +24,16 @@ class FullTextMatchSpec extends SparkTestBase {
   }
 
   test("results equal the direct searcher (same kernel)") {
-    val viaPlan = GraftSearch.search(spark, indexDir, "posting merge", 20)
+    val viaPlan = Searcher.search(spark, indexDir, "posting merge", 20)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-    val direct = Searcher.search(spark, indexDir, "posting merge", 20)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
+    val direct = Searcher.searchHits(spark, indexDir,
+        Searcher.resolve(spark, indexDir, "posting merge"), 20)
+      .zipWithIndex.map { case (h, i) => (i + 1, h.docId, h.score) }.toSeq
     assert(viaPlan == direct)
   }
 
   test("optimizer rule folds LIMIT into k") {
-    val df = GraftSearch.search(spark, indexDir, "import", 1000).limit(5)
+    val df = Searcher.search(spark, indexDir, "import", 1000).limit(5)
     val optimized = df.queryExecution.optimizedPlan
     val ks = optimized.collect { case f: FullTextMatch => f.k }
     assert(ks == Seq(5), s"limit not pushed:\n$optimized")
@@ -41,7 +42,7 @@ class FullTextMatchSpec extends SparkTestBase {
 
   test("composes with relational operators downstream") {
     import org.apache.spark.sql.functions._
-    val df = GraftSearch.search(spark, indexDir, "import merge", 50)
+    val df = Searcher.search(spark, indexDir, "import merge", 50)
       .filter(col("score") > 0)
       .agg(count(lit(1)).as("n"), max("score").as("best"))
     val row = df.collect()(0)

@@ -65,10 +65,10 @@ class SurfaceSpec extends SparkTestBase {
   }
 
   test("language filter restricts variants") {
-    val en = TextSurface.searchVariants(spark, storeDir, "मुंबई", Seq("city"),
-      languages = Seq("en"))
-    val hi = TextSurface.searchVariants(spark, storeDir, "मुंबई", Seq("city"),
-      languages = Seq("hi"))
+    val en = TextSurface.searchVariantsBulk(spark, storeDir, Seq("मुंबई"),
+      Seq("city"), languages = Seq("en")).head
+    val hi = TextSurface.searchVariantsBulk(spark, storeDir, Seq("मुंबई"),
+      Seq("city"), languages = Seq("hi")).head
     assert(en.isEmpty)
     assert(hi.map(_.value).distinct == Seq("Mumbai"))
   }
@@ -120,8 +120,8 @@ class SurfaceSpec extends SparkTestBase {
   }
 
   test("entity filter is filter-context (no score contribution)") {
-    val hits = TextSurface.searchVariants(spark, storeDir,
-      "pizza in mumbai", Seq("cuisine"))
+    val hits = TextSurface.searchVariantsBulk(spark, storeDir,
+      Seq("pizza in mumbai"), Seq("cuisine")).head
     assert(hits.nonEmpty && hits.forall(_.entity == "cuisine"))
   }
 
