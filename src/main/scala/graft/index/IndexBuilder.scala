@@ -331,13 +331,10 @@ object IndexBuilder {
         new String(java.nio.file.Files.readAllBytes(stampPath(dir)),
           java.nio.charset.StandardCharsets.UTF_8) == buildToken
 
-    val verbose = spark.conf.getOption("graft.build.verbose").contains("true")
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      onStageTime(label, sec)
-      if (verbose) println(f"[build] $label: $sec%.2f s")
+      onStageTime(label, (System.nanoTime() - t0) / 1e9)
       r
     }
 

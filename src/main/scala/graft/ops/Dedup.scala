@@ -1067,9 +1067,7 @@ object Dedup {
       .localCheckpoint(true)
     var iter = 0
     var converged = false
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && iter < maxIter) {
-      val tRound = System.nanoTime()
       // (a) neighbor-min: the smallest label among me and my neighbors
       val viaNeighbors = edges
         .join(labels.withColumnRenamed("id", "dst"), "dst")
@@ -1103,12 +1101,7 @@ object Dedup {
       val changedRows = next.filter(col("label") =!= col("prev"))
       labels = next.select(col("id"), col("label"))
       iter += 1
-      if (ccDebug) {
-        // one job for both: the count decides convergence too
-        val changed = changedRows.count()
-        converged = changed == 0
-        println(f"[cc] round $iter ${(System.nanoTime() - tRound) / 1e9}%.3f s converged=$converged changed=$changed")
-      } else converged = changedRows.isEmpty
+      converged = changedRows.isEmpty
     }
     labels
   }

@@ -138,19 +138,16 @@ final class IndexReader private (
     * model: the FIRST query touching a term fetches that term's (salt)
     * shards with one narrow pushdown job; repeats serve driver-locally at
     * cached-tier latency. Byte-budgeted; a query whose terms exceed the
-    * budget falls back to scatter-gather. Eviction is LRU by default
-    * (`cfg.shardCacheLru` — hits re-rank the term to the tail; FIFO
-    * available for zero hit-path work) — measured head-to-head by
-    * TierProbe's policy probe: on Zipf-skewed workloads whose head set
-    * fits the budget, LRU keeps the head resident where FIFO cycles it
-    * out (0.680 vs 0.626 hit-rate, 1.4x lower total latency at 40%
-    * budget).
+    * budget falls back to scatter-gather. Eviction is LRU: every hit
+    * re-ranks its term to the tail of the victim list, so on Zipf-skewed
+    * workloads whose head set fits the budget the head stays resident
+    * (EngineSpec pins the exact hit/miss trace).
     */
   private val shardCache =
     TrieMap.empty[String, Seq[(String, Int, Int, Int, Array[Byte])]]
   private val shardCacheBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-  // insertion-ordered victim list (head = next victim), guarded by its own
-  // monitor; LRU moves hit terms to the tail under the same lock
+  // victim list in least-recent-use order (head = next victim), guarded by
+  // its own monitor; hits move their term to the tail under the same lock
   private val shardCacheOrder = new java.util.LinkedHashSet[String]()
   private val shardCacheHits = new java.util.concurrent.atomic.AtomicLong(0L)
   private val shardCacheMisses = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -168,23 +165,11 @@ final class IndexReader private (
       Option[Seq[(String, Int, Int, Int, Array[Byte])]] =
     fetchShardsByName(rq.terms.map(_.term))
 
-  /** Coordinator-tier bulk prewarm (J1): fetch ALL missing terms' shards in
-    * ONE pushdown job. A cold bulk call otherwise pays one narrow job per
-    * query that brings a novel term; prewarming the union term set first
-    * makes the whole batch cost one job. No-op on the driver-cached tier
-    * (everything is already local) and when the shard cache is disabled.
-    * Terms beyond the byte budget simply stay uncached (their queries fall
-    * back to scatter-gather, as ever).
-    */
-  def prewarmShards(terms: Seq[String]): Unit =
-    if (segMap.isEmpty && cfg.maxQueryShardCacheBytes > 0)
-      fetchShardsByName(terms.distinct)
-
   /** All shard rows (term, salt, numSalts, maxTf, postings) for `terms`,
     * driver-local, if this reader can serve them without a per-query job:
     * from the in-memory segment map on the cached tier, else through the
-    * (prewarmed) shard cache within its byte budget. None → caller should
-    * use the distributed path.
+    * shard cache within its byte budget (missing terms fetched in ONE
+    * pushdown job). None → caller should use the distributed path.
     */
   private[graft] def bulkShards(terms: Seq[String]):
       Option[Seq[(String, Int, Int, Int, Array[Byte])]] = {
@@ -213,14 +198,14 @@ final class IndexReader private (
         .collect()
         .groupBy(_._1)
       // single lock around accounting: two threads fetching the same term
-      // must not double-insert into the FIFO or double-count the bytes
+      // must not double-insert into the victim list or double-count bytes
       shardCacheOrder.synchronized {
         for (t <- missing if !shardCache.contains(t)) {
           val shards = fetched.getOrElse(t, Array.empty).toSeq
           val bytes = shards.map(_._5.length.toLong).sum
           if (bytes <= cfg.maxQueryShardCacheBytes) {
-            // evict from the head (oldest insert / least-recent hit under
-            // LRU) until the new term fits
+            // evict from the head (least-recently used) until the new
+            // term fits
             while (shardCacheBytes.get() + bytes > cfg.maxQueryShardCacheBytes &&
               !shardCacheOrder.isEmpty) {
               val it = shardCacheOrder.iterator()
@@ -240,7 +225,7 @@ final class IndexReader private (
     }
     val all = termNames.flatMap { t =>
       val hit = shardCache.get(t)
-      if (cfg.shardCacheLru && hit.isDefined) shardCacheOrder.synchronized {
+      if (hit.isDefined) shardCacheOrder.synchronized {
         // re-rank to the tail; skip terms that were never admitted (over
         // budget) or already evicted between the lookup and this bump
         if (shardCacheOrder.remove(t)) shardCacheOrder.add(t)
@@ -320,16 +305,7 @@ object IndexReader {
         * coordinator/shard-fetch model); 0 disables — every query then runs
         * scatter-gather (the path EngineSpec pins bit-identical).
         */
-      maxQueryShardCacheBytes: Long = 256L << 20,
-      /** eviction policy for the term-shard cache: true = LRU (hits re-rank
-        * the term to the tail — keeps a Zipf head resident when the budget
-        * is tight), false = FIFO (insertion order, zero hit-path work).
-        * LRU default: TierProbe's policy probe measured 0.680 vs 0.626
-        * hit-rate and 1.4x lower total latency on a Zipf(1.1) workload at
-        * 40% budget; the hit-path cost is one synchronized remove/add,
-        * negligible next to the pushdown job each miss pays.
-        */
-      shardCacheLru: Boolean = true)
+      maxQueryShardCacheBytes: Long = 256L << 20)
 
   private val openReaders = TrieMap.empty[(String, Int, ReaderConfig), IndexReader]
 

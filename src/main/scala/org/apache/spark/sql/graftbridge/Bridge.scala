@@ -7,7 +7,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Column ⇄ Expression bridge. Spark 4 made the converters `private[sql]`
   * (Column is backed by ColumnNode in sql-api); extension libraries reach
   * them from an org.apache.spark.sql subpackage — this is the only file in
-  * the repo that lives outside the graft namespace.
+  * the repo that lives outside the graft namespace, so the other
+  * `private[spark]` hooks the engine needs live here too.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -18,4 +19,11 @@ object Bridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Block until every listener has seen every event posted so far
+    * (`listenerBus` is private[spark]): a listener's job-end lines then
+    * land before the caller moves on.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -248,7 +248,7 @@ class EngineSpec extends SparkTestBase {
     assert(dRq.terms.toSet == cRq.terms.toSet, "fuzzy expansion differs across tiers")
   }
 
-  test("shard-cache policy: LRU keeps the re-hit term resident, FIFO cycles it") {
+  test("shard-cache policy: LRU keeps the re-hit term resident") {
     import graft.query.IndexReader
     val terms = Seq("parser", "codec", "builder")
     // size each term's resident shard bytes with an unbounded cache
@@ -263,17 +263,12 @@ class EngineSpec extends SparkTestBase {
     // any two terms fit, all three never — the regime where policy matters
     val budget = sizes.sum - sizes.min
     val accesses = Seq(0, 1, 0, 2, 0, 1, 0, 2, 0).map(terms)
-    def run(lru: Boolean): (Long, Long) = {
-      val r = IndexReader.open(spark, indexDir,
-        IndexReader.ReaderConfig(0, 0, budget, shardCacheLru = lru))
-      accesses.foreach(q => r.searchHits(r.resolve(q), 10))
-      r.shardCacheStats
-    }
-    // LRU: every re-access of term 0 after the first is a hit (4h/5m);
-    // FIFO: insertion order evicts term 0 while it is still the hottest
-    // (2h/7m). Exact traces — the budget admits exactly two terms.
-    assert(run(lru = true) == ((4L, 5L)), "LRU should keep the head term")
-    assert(run(lru = false) == ((2L, 7L)), "FIFO should cycle the head term")
+    val r = IndexReader.open(spark, indexDir,
+      IndexReader.ReaderConfig(0, 0, budget))
+    accesses.foreach(q => r.searchHits(r.resolve(q), 10))
+    // every re-access of term 0 after the first is a hit (4h/5m) — exact
+    // trace: the budget admits exactly two terms
+    assert(r.shardCacheStats == ((4L, 5L)), "LRU should keep the head term")
   }
 
   test("shard cache is safe under concurrent queries (LRU bump + evict race)") {
@@ -288,7 +283,7 @@ class EngineSpec extends SparkTestBase {
     val expected = querySet.map(q =>
       q -> cached.searchHits(cached.resolve(q), 20).toSeq).toMap
     val r = IndexReader.open(spark, indexDir,
-      IndexReader.ReaderConfig(0, 0, 64L << 10, shardCacheLru = true))
+      IndexReader.ReaderConfig(0, 0, 64L << 10))
     val pool = Executors.newFixedThreadPool(8)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
